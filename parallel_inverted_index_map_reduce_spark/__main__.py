@@ -177,20 +177,11 @@ def _search(args) -> int:
         if args.phrase:
             ran = True
             slop = getattr(args, "slop", 0)
-            if slop:
-                res = (
-                    srv.phrase_slop_search_stored(
-                        spark, stored, args.phrase, slop=slop
-                    )
-                    if stored
-                    else ix.phrase_search_slop(docs, args.phrase, slop=slop)
-                )
-            else:
-                res = (
-                    srv.phrase_search_stored(spark, stored, args.phrase)
-                    if stored
-                    else ix.phrase_search(docs, args.phrase)
-                )
+            res = (
+                srv.phrase_search_stored(spark, stored, args.phrase, slop=slop)
+                if stored
+                else ix.phrase_search(docs, args.phrase, slop=slop)
+            )
             tag = f"phrase~{slop}" if slop else "phrase"
             rows = res.orderBy("doc_id").collect()
             for r in rows:

@@ -29,19 +29,25 @@ which spreads each letter across many tasks.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_df
 
 
-def postings_flat(docs: DataFrame, one_based: bool = False) -> DataFrame:
-    """Distinct (word, doc_id) pairs — reference O8's dedup-on-insert
-    (main.cpp:183-200) as a distinct aggregation."""
+def _doc_tokens(docs: DataFrame, one_based: bool) -> DataFrame:
+    """(doc_id, word) tokens; ``one_based=True`` shifts ids to the
+    reference's printed form (main.cpp:312 prints file_id + 1)."""
     t = tokens_df(docs)
     if one_based:
         t = t.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    return t.distinct()
+    return t
+
+
+def postings_flat(docs: DataFrame, one_based: bool = False) -> DataFrame:
+    """Distinct (word, doc_id) pairs — reference O8's dedup-on-insert
+    (main.cpp:183-200) as a distinct aggregation."""
+    return _doc_tokens(docs, one_based).distinct()
 
 
 def term_frequencies(docs: DataFrame) -> DataFrame:
@@ -59,11 +65,20 @@ def _with_df_letter(idx: DataFrame) -> DataFrame:
     )
 
 
+def _postings_index(tokens: DataFrame) -> DataFrame:
+    """(letter, word, df, postings) from a (word, doc_id) token frame.
+    collect_set dedups AND partially aggregates map-side, so this is
+    ONE shuffle (vs distinct() + groupBy = two)."""
+    idx = tokens.groupBy("word").agg(
+        F.sort_array(F.collect_set("doc_id")).alias("postings")
+    )
+    return _with_df_letter(idx).select("letter", "word", "df", "postings")
+
+
 def _attach_rank_window(idx: DataFrame) -> DataFrame:
     """Final projection with the per-letter (df desc, word asc) rank as
-    a 26-partition window — the reference-shaped form. The decomposed
-    alternative in :func:`build_index_scalable` lifts the 26-task
-    ceiling; both orderings are proven identical."""
+    a 26-partition window — the reference's own sort (main.cpp:225-231)
+    over its 26 buckets."""
     w = Window.partitionBy("letter").orderBy(F.desc("df"), F.asc("word"))
     return idx.select(
         "letter",
@@ -80,66 +95,7 @@ def build_index(docs: DataFrame, one_based: bool = False) -> DataFrame:
     ``one_based=True`` reproduces the reference's printed ids
     (main.cpp:312 prints file_id + 1).
     """
-    t = tokens_df(docs)
-    if one_based:
-        t = t.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    # collect_set dedups AND partially aggregates map-side, so the build
-    # is ONE shuffle (vs distinct() + groupBy = two).
-    idx = t.groupBy("word").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("postings")
-    )
-    return _attach_rank_window(_with_df_letter(idx))
-
-
-def build_index_scalable(docs: DataFrame, one_based: bool = False) -> DataFrame:
-    """:func:`build_index` with the per-letter rank DECOMPOSED — the
-    beyond-10^8-words variant the module docstring promises.
-
-    The plain build windows over 26 letter partitions, so 26 tasks sort
-    everything (the reference's own ceiling, inherited from its 26
-    buckets). Here rank(letter, df desc, word) splits into
-
-        offset(letter, df)  — how many words of this letter have higher
-                              df: a window over the per-(letter, df)
-                              COUNTS, thousands of rows total, and
-        row_number within (letter, df) ordered by word — a window whose
-        partition count is the number of DISTINCT (letter, df) pairs,
-        spreading the sort across the cluster instead of 26 tasks.
-
-    rank = offset + within. Asserted row-identical to build_index in
-    tests/test_index_merge_upsert.py.
-    """
-    t = tokens_df(docs)
-    if one_based:
-        t = t.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    idx = _with_df_letter(
-        t.groupBy("word").agg(
-            F.sort_array(F.collect_set("doc_id")).alias("postings")
-        )
-    )
-    counts = idx.groupBy("letter", "df").agg(F.count("*").alias("n_words"))
-    w_off = (
-        Window.partitionBy("letter")
-        .orderBy(F.desc("df"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "letter",
-        "df",
-        F.coalesce(F.sum("n_words").over(w_off), F.lit(0)).alias("offset"),
-    )
-    w_in = Window.partitionBy("letter", "df").orderBy(F.asc("word"))
-    return (
-        idx.withColumn("within", F.row_number().over(w_in))
-        .join(offsets, ["letter", "df"])
-        .select(
-            "letter",
-            "word",
-            "df",
-            "postings",
-            (F.col("offset") + F.col("within")).cast("long").alias("rank"),
-        )
-    )
+    return _attach_rank_window(_postings_index(_doc_tokens(docs, one_based)))
 
 
 def build_index_chunked(
@@ -173,8 +129,9 @@ def build_index_chunked(
 
 
 def chunk_pairs(pairs: DataFrame, chunk_size: int = 4096) -> DataFrame:
-    """The chunking tail of :func:`build_index_chunked` over an
-    already-built DISTINCT (word, doc_id) frame — callers that hold the
+    """The chunking tail of :func:`build_index_chunked` and
+    :func:`merge_index_chunked` over an already-built DISTINCT
+    (word, doc_id) frame — callers that hold the
     pairs from another derivation (e.g. the serving store's one
     tokenization feeding positions AND chunks) skip the re-tokenize."""
     w = Window.partitionBy("word").orderBy("doc_id")
@@ -204,15 +161,7 @@ def assemble_chunked_index(chunked: DataFrame) -> DataFrame:
     small slices (term lookups after a word-filter pushdown), NOT the
     100 TB path — scale consumers stream the chunks directly.
     """
-    merged = chunked.groupBy("word").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk_id", "postings"))),
-                lambda s: s["postings"],
-            )
-        ).alias("postings")
-    )
-    return _attach_rank_window(_with_df_letter(merged))
+    return _attach_rank_window(assemble_term_chunks(chunked))
 
 
 def merge_index(
@@ -234,10 +183,7 @@ def merge_index(
     ``one_based`` must match the flag the old index was built with, so
     the new side's tokens land in the same id space.
     """
-    new_pairs = tokens_df(new_docs)
-    if one_based:
-        new_pairs = new_pairs.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    new_side = new_pairs.groupBy("word").agg(
+    new_side = _doc_tokens(new_docs, one_based).groupBy("word").agg(
         F.collect_set("doc_id").alias("postings")
     )
     old_side = old_index.select("word", "postings")
@@ -269,7 +215,7 @@ def merge_index_chunked(
     not the index size — which is what makes daily ingests affordable
     on a 100 TB index. Affected words re-derive from the union of their
     exploded stored postings and the new documents' distinct pairs,
-    through the same spillable-ordinal window as
+    through :func:`chunk_pairs`, the chunking tail of
     :func:`build_index_chunked`; proven row-identical to a from-scratch
     chunked rebuild in tests/test_index_merge_upsert.py.
 
@@ -294,22 +240,8 @@ def merge_index_chunked(
         stored_chunks.join(affected, "word", "left_semi")
         .select("word", F.explode("postings").alias("doc_id"))
     )
-    merged_pairs = old_pairs.unionByName(new_pairs).distinct()
-
-    w = Window.partitionBy("word").orderBy("doc_id")
-    rebuilt = (
-        merged_pairs.withColumn("ord", F.row_number().over(w) - 1)
-        .withColumn("chunk_id", F.floor(F.col("ord") / chunk_size))
-        .groupBy("word", "chunk_id")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("postings"))
-    )
-    w_df = Window.partitionBy("word")
-    rebuilt = (
-        rebuilt.withColumn(
-            "df", F.sum(F.size("postings")).over(w_df).cast("long")
-        )
-        .withColumn("letter", F.substring("word", 1, 1))
-        .select("letter", "word", "chunk_id", "df", "postings")
+    rebuilt = chunk_pairs(
+        old_pairs.unionByName(new_pairs).distinct(), chunk_size
     )
     if delta_only:
         return rebuilt
@@ -399,51 +331,14 @@ def term_lookup(index: DataFrame, terms: list[str]) -> DataFrame:
     return index.where(F.col("word").isin(terms))
 
 
-def boolean_and(index: DataFrame, t1: str, t2: str) -> DataFrame:
-    """Posting-list intersection (boolean AND search) via array_intersect.
-
-    The reference builds the index but never queries it (SURVEY.md §2.1);
-    this closes the loop. Self-join of two single-row lookups — both
-    sides broadcast."""
-    a = index.where(F.col("word") == t1).select(F.col("postings").alias("p1"))
-    b = index.where(F.col("word") == t2).select(F.col("postings").alias("p2"))
-    return a.crossJoin(F.broadcast(b)).select(
-        F.lit(t1).alias("term1"),
-        F.lit(t2).alias("term2"),
-        F.sort_array(F.array_intersect("p1", "p2")).alias("doc_ids"),
-    )
-
-
-def boolean_or(index: DataFrame, t1: str, t2: str) -> DataFrame:
-    a = index.where(F.col("word") == t1).select(F.col("postings").alias("p1"))
-    b = index.where(F.col("word") == t2).select(F.col("postings").alias("p2"))
-    return a.crossJoin(F.broadcast(b)).select(
-        F.lit(t1).alias("term1"),
-        F.lit(t2).alias("term2"),
-        F.sort_array(F.array_union("p1", "p2")).alias("doc_ids"),
-    )
-
-
-def boolean_not(index: DataFrame, t1: str, t2: str) -> DataFrame:
-    """Docs containing t1 but not t2 (array_except)."""
-    a = index.where(F.col("word") == t1).select(F.col("postings").alias("p1"))
-    b = index.where(F.col("word") == t2).select(F.col("postings").alias("p2"))
-    return a.crossJoin(F.broadcast(b)).select(
-        F.lit(t1).alias("term1"),
-        F.lit(t2).alias("term2"),
-        F.sort_array(F.array_except("p1", "p2")).alias("doc_ids"),
-    )
-
-
 def boolean_search(
     docs: DataFrame, t1: str, t2: str, with_lookup: bool = False
 ) -> DataFrame:
     """AND/OR/NOT posting-list search in ONE scan + ONE aggregation.
 
-    The composed form of :func:`boolean_and`/``_or``/``_not``: instead
-    of three union branches that each rebuild the index (Spark does not
-    share common subplans across a union — measured 6 scans / 30
-    exchanges for the naive union), the two terms' posting sets are
+    Instead of three per-op union branches that each rebuild the index
+    (Spark does not share common subplans across a union — measured 6
+    scans / 30 exchanges for the naive union), the two terms' posting sets are
     collected in a single filtered global aggregate (the ``word IN
     (t1, t2)`` predicate pushes into the token stream, so only matching
     tokens reach the aggregation) and all three ops are projected from
@@ -556,21 +451,32 @@ def positional_postings(docs: DataFrame) -> DataFrame:
     )
 
 
-def phrase_search(docs: DataFrame, phrase: str) -> DataFrame:
-    """(doc_id, match_positions): documents containing the exact phrase
-    (normalized-adjacent tokens), with every start position.
+def _phrase_words(phrase: str, slop: int) -> list[str]:
+    """The phrase's normalized words, rejecting a negative slop or a
+    phrase that normalizes to nothing."""
+    if slop < 0:
+        raise ValueError("slop must be >= 0")
+    words = normalize_query_tokens(phrase)
+    if not words:
+        raise ValueError(f"phrase normalizes to nothing: {phrase!r}")
+    return words
+
+
+def phrase_search(docs: DataFrame, phrase: str, slop: int = 0) -> DataFrame:
+    """(doc_id, match_positions): documents containing the phrase's
+    words in order with up to ``slop`` intervening tokens between each
+    consecutive pair (``slop=0`` = exact phrase: normalized-adjacent
+    tokens), with every start position.
 
     ONE scan + ONE aggregation, like :func:`boolean_search`: the token
     stream is filtered to the phrase's words (predicate pushes into the
     scan), each word's position set is gathered per doc in a single
-    groupBy, and adjacency is verified by a per-row array predicate
-    (``exists p in P0: p+i in Pi for all i``) — no n-way self-join, no
-    window. Shuffle volume is bounded by the phrase terms' total term
-    frequency, the positional-postings bound.
+    groupBy, and the ordered chain is verified by
+    :func:`phrase_slop_filter`'s backward-reachability array fold — no
+    n-way self-join, no window. Shuffle volume is bounded by the phrase
+    terms' total term frequency, the positional-postings bound.
     """
-    words = normalize_query_tokens(phrase)
-    if not words:
-        raise ValueError(f"phrase normalizes to nothing: {phrase!r}")
+    words = _phrase_words(phrase, slop)
     toks = positional_tokens(docs).where(F.col("word").isin(*set(words)))
     per_doc = toks.groupBy("doc_id").agg(
         *[
@@ -580,27 +486,7 @@ def phrase_search(docs: DataFrame, phrase: str) -> DataFrame:
             for i, w in enumerate(words)
         ]
     )
-    return phrase_adjacency_filter(per_doc, len(words))
-
-
-def phrase_adjacency_filter(per_doc: DataFrame, n_words: int) -> DataFrame:
-    """The phrase-match tail shared by the corpus-scan and stored-index
-    paths: a (doc_id, p0..p{n-1}) frame of per-word sorted position
-    arrays -> (doc_id, match_positions). Adjacency is a per-row array
-    predicate (``exists p in p0: p+i in p_i for all i``) — no n-way
-    self-join, no window, no shuffle beyond the input's."""
-
-    def adjacent(p: Column) -> Column:
-        cond = F.lit(True)
-        for i in range(1, n_words):
-            cond = cond & F.array_contains(F.col(f"p{i}"), p + i)
-        return cond
-
-    matches = F.filter(F.col("p0"), adjacent)
-    return (
-        per_doc.select("doc_id", matches.alias("match_positions"))
-        .where(F.size("match_positions") > 0)
-    )
+    return phrase_slop_filter(per_doc, len(words), slop)
 
 
 def proximity_search(
@@ -842,11 +728,7 @@ def prefix_search(docs: DataFrame, prefix: str) -> DataFrame:
     stored layout use serving.prefix_search_stored, which additionally
     prunes to the first letter's partition directory."""
     p = _normalize_single_term(prefix, "prefix")
-    matched = tokens_df(docs).where(F.col("word").startswith(p))
-    idx = matched.groupBy("word").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("postings")
-    )
-    return _with_df_letter(idx).select("letter", "word", "df", "postings")
+    return _postings_index(tokens_df(docs).where(F.col("word").startswith(p)))
 
 
 def deletion_variants(
@@ -922,13 +804,9 @@ def fuzzy_term_search(
         .distinct()
     )
     matched = cand.where(F.levenshtein(F.col("word"), F.lit(q)) <= max_dist)
-    idx = (
-        tokens_df(docs)
-        .join(F.broadcast(matched), "word", "left_semi")
-        .groupBy("word")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("postings"))
+    return _postings_index(
+        tokens_df(docs).join(F.broadcast(matched), "word", "left_semi")
     )
-    return _with_df_letter(idx).select("letter", "word", "df", "postings")
 
 
 def _py_deletion_variants(word: str, max_deletes: int) -> set[str]:
@@ -1061,39 +939,10 @@ def mlt_rank(
     )
 
 
-def phrase_search_slop(
-    docs: DataFrame, phrase: str, slop: int = 0
-) -> DataFrame:
-    """(doc_id, match_positions): sloppy-phrase match — the phrase's
-    words in order, with up to ``slop`` intervening tokens between each
-    consecutive pair. ``slop=0`` is exactly :func:`phrase_search`
-    (proven row-identical in tests/test_vocab_search.py).
-
-    Same one-scan/one-aggregation shape as phrase_search; the ordered
-    chain is verified by :func:`phrase_slop_filter`'s backward
-    reachability fold over the per-word position arrays — n_words array
-    passes per row, no n-way self-join."""
-    if slop < 0:
-        raise ValueError("slop must be >= 0")
-    words = normalize_query_tokens(phrase)
-    if not words:
-        raise ValueError(f"phrase normalizes to nothing: {phrase!r}")
-    toks = positional_tokens(docs).where(F.col("word").isin(*set(words)))
-    per_doc = toks.groupBy("doc_id").agg(
-        *[
-            F.sort_array(
-                F.collect_set(F.when(F.col("word") == w, F.col("npos")))
-            ).alias(f"p{i}")
-            for i, w in enumerate(words)
-        ]
-    )
-    return phrase_slop_filter(per_doc, len(words), slop)
-
-
 def phrase_slop_filter(
     per_doc: DataFrame, n_words: int, slop: int
 ) -> DataFrame:
-    """The sloppy-phrase tail shared by the corpus-scan and stored
+    """The phrase-match tail shared by the corpus-scan and stored
     paths: (doc_id, p0..p{n-1}) per-word sorted position arrays ->
     (doc_id, match_positions), where match_positions are the START
     positions from which an in-order chain exists with every gap in
@@ -1145,8 +994,4 @@ def suffix_search(docs: DataFrame, suffix: str) -> DataFrame:
     (serving.py suffix_matched_words): the suffix becomes a prefix over
     the reversed vocabulary, partitioned by the word's LAST letter."""
     sfx = _normalize_single_term(suffix, "suffix")
-    matched = tokens_df(docs).where(F.col("word").endswith(sfx))
-    idx = matched.groupBy("word").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("postings")
-    )
-    return _with_df_letter(idx).select("letter", "word", "df", "postings")
+    return _postings_index(tokens_df(docs).where(F.col("word").endswith(sfx)))

@@ -310,9 +310,8 @@ def quota_sample_scalable(
     n_buckets: int = 64,
     salt: str = "quota",
 ) -> DataFrame:
-    """:func:`quota_sample` with the hot-stratum sort DECOMPOSED — the
-    index build's scalable-rank move (build_index_scalable), applied to
-    per-group top-k.
+    """:func:`quota_sample` with the hot-stratum sort DECOMPOSED: one
+    per-group top-k splits into many small sorts plus a tiny merge.
 
     The plain form windows over the stratum, so one task sorts each
     stratum end to end; a stratum holding half the corpus is then one
@@ -379,9 +378,10 @@ def priority_sample_scalable(
     k=25, wrong at k=10M) and without any single task sorting the
     corpus.
 
-    The rank decomposes the build_index_scalable way, bucketed by the
-    priority's VALUE RANGE (priorities are round-9 -ln(u)/w with
-    w >= 1, so they live in [0, 22.181): u >= 2^-32 bounds -ln(u)):
+    The global rank decomposes into (rows in lower buckets) + (rank
+    within bucket), bucketed by the priority's VALUE RANGE (priorities
+    are round-9 -ln(u)/w with w >= 1, so they live in [0, 22.181):
+    u >= 2^-32 bounds -ln(u)):
 
     - bucket = floor(p / 22.181 * n_buckets): rank order IS bucket
       order, so global rank = (count in lower buckets) + (rank within

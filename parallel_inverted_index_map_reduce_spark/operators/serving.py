@@ -34,7 +34,7 @@ Layout written by :func:`store_search_index` under a ``base`` name:
 
 Every query operator here is proven ROW-IDENTICAL to its corpus-scan
 twin (tests/test_index_storage.py) because both share the same scoring
-or matching tail (index.py bm25_rank / phrase_adjacency_filter /
+or matching tail (index.py bm25_rank / phrase_slop_filter /
 proximity_min_filter) — only the tf/position SOURCING differs. Plan
 tests assert the stored reads actually prune (PushedFilters +
 SelectedBucketsCount), which is the entire point.
@@ -57,6 +57,7 @@ from .bucketing import (
 )
 from .index import (
     _normalize_single_term,
+    _phrase_words,
     _py_deletion_variants,
     _with_df_letter,
     assemble_term_chunks,
@@ -66,7 +67,7 @@ from .index import (
     lookup_stored_terms,
     mlt_rank,
     normalize_query_tokens,
-    phrase_adjacency_filter,
+    phrase_slop_filter,
     positional_postings,
     proximity_min_filter,
     store_chunked_index,
@@ -616,58 +617,23 @@ def bm25_from_frames(
 
 
 def phrase_search_stored(
-    spark: SparkSession, base: str, phrase: str
-) -> DataFrame:
-    """(doc_id, match_positions): exact-phrase match served from the
-    stored positional index — row-identical to index.py phrase_search
-    (same phrase_adjacency_filter tail). The per-word position arrays
-    are ALREADY aggregated in storage, so the only work is the pruned
-    read plus one groupBy(doc_id) over rows bounded by the phrase
-    terms' document frequency."""
-    return phrase_from_frames(spark.table(f"{base}_positions"), phrase)
-
-
-def phrase_from_frames(positions: DataFrame, phrase: str) -> DataFrame:
-    """Frame-parameterized phrase-match body (see bm25_from_frames)."""
-    words = normalize_query_tokens(phrase)
-    if not words:
-        raise ValueError(f"phrase normalizes to nothing: {phrase!r}")
-    pos = pruned_positions(positions, set(words))
-    empty = F.array().cast("array<int>")
-    per_doc = pos.groupBy("doc_id").agg(
-        *[
-            F.coalesce(
-                F.max(F.when(F.col("word") == w, F.col("positions"))), empty
-            ).alias(f"p{i}")
-            for i, w in enumerate(words)
-        ]
-    )
-    return phrase_adjacency_filter(per_doc, len(words))
-
-
-def phrase_slop_search_stored(
     spark: SparkSession, base: str, phrase: str, slop: int = 0
 ) -> DataFrame:
-    """(doc_id, match_positions): sloppy-phrase match served from the
-    stored positional index — same phrase_slop_filter tail as the
-    corpus-scan form (index.py phrase_search_slop), at pruned-lookup
-    cost."""
-    return phrase_slop_from_frames(
-        spark.table(f"{base}_positions"), phrase, slop=slop
-    )
+    """(doc_id, match_positions): phrase match (up to ``slop``
+    intervening tokens per gap) served from the stored positional
+    index — row-identical to index.py phrase_search (same
+    phrase_slop_filter tail). The per-word position arrays are ALREADY
+    aggregated in storage, so the only work is the pruned read plus one
+    groupBy(doc_id) over rows bounded by the phrase terms' document
+    frequency."""
+    return phrase_from_frames(spark.table(f"{base}_positions"), phrase, slop)
 
 
-def phrase_slop_from_frames(
+def phrase_from_frames(
     positions: DataFrame, phrase: str, slop: int = 0
 ) -> DataFrame:
-    """Frame-parameterized sloppy-phrase body (see bm25_from_frames)."""
-    from .index import phrase_slop_filter
-
-    if slop < 0:
-        raise ValueError("slop must be >= 0")
-    words = normalize_query_tokens(phrase)
-    if not words:
-        raise ValueError(f"phrase normalizes to nothing: {phrase!r}")
+    """Frame-parameterized phrase-match body (see bm25_from_frames)."""
+    words = _phrase_words(phrase, slop)
     pos = pruned_positions(positions, set(words))
     empty = F.array().cast("array<int>")
     per_doc = pos.groupBy("doc_id").agg(

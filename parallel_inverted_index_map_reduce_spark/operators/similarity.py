@@ -565,27 +565,36 @@ def _build_decimal_cosine_batches():
 
     - products vectorized over rows per component (same IEEE op);
     - round-7 via scaled-binary half-up floor(|p|*1e7 + 0.5) with an
-      EXACT fallback: any component whose |p|*1e7 lies within 1e-6 of
-      a half-integer (covers the multiply's ulp error plus the
-      repr-vs-binary gap), or with |p| >= 1e4, is recomputed through
-      the scalar decimal twin (round 7, then the double round-trip
-      and the scale-9 cast, exactly as the expression chain does). For
-      |p| < 1e4 the fast integer path IS the expression value: the
-      rounded double r' round-trips to the scale-7 decimal r, and any
-      shorter decimal in r's ulp interval differs by < 5e-10, so the
-      scale-9 cast lands on r exactly;
-    - the decimal sum is an int64 sum of 1e-9-scale units (|sum| <
-      2^53 by the |p| bound, so float(sum)/1e9 is the correctly
-      rounded decimal->double cast);
-    - round-6 repeats the fast/fallback split on the quotient, and
-      ``+ 0.0`` folds Java's BigDecimal ZERO back to +0.0 (numpy's
-      sign-propagating floor would otherwise emit -0.0 for tiny
-      negative cosines, which stringifies differently);
+      EXACT fallback: any component whose |p|*1e7 lies within
+      2 * (ulp(p)*1e7 + ulp(|p|*1e7)) of a half-integer, or with
+      |p| >= 1e4, is recomputed through the scalar decimal twin (round
+      7, then the double round-trip and the scale-9 cast, exactly as
+      the expression chain does). HALF_UP acts on repr(p), which lies
+      within half an ulp of p, and the scaled product adds half an ulp
+      of its own, so the band is relative to both — a fixed band
+      misses half-boundaries once |p| >= 1e3. For |p| < 1e4 the fast
+      integer path IS the expression value: the rounded double r'
+      round-trips to the scale-7 decimal r, and any shorter decimal in
+      r's ulp interval differs by < 5e-10, so the scale-9 cast lands on
+      r exactly;
+    - the decimal sum is an int64 sum of 1e-9-scale units. Rows whose
+      sum of |p| could take it to 2^52 (WIDE rows) skip the int64 path
+      and fold the whole row in Python integers instead, left to right
+      like the expression, NULLing the dot when a component or a
+      partial sum leaves decimal(28,9) (the expression's
+      overflow-to-NULL cast; ANSI raises there instead). Every other
+      row has |sum| < 2^52, so float(sum)/1e9 is the correctly rounded
+      decimal->double cast;
+    - round-6 repeats the fast/fallback split on the quotient with the
+      same ulp-relative band, and ``+ 0.0`` folds Java's BigDecimal
+      ZERO back to +0.0 (numpy's sign-propagating floor would
+      otherwise emit -0.0 for tiny negative cosines, which stringifies
+      differently);
     - non-finite products poison the whole dot exactly as the
       expression does (NaN product -> decimal cast NULL -> NULL dot ->
       NULL cosine); a ZERO denominator nulls the row (Spark's legacy
       Divide semantics — under ANSI the expression form raises there
-      instead, but zero-norm vectors never reach real query paths);
+      instead; _grouped_pairs_cosine drops zero-norm vectors first);
       a NaN dot over a nonzero denominator passes through round
       unchanged.
 
@@ -596,7 +605,7 @@ def _build_decimal_cosine_batches():
         import decimal
 
         with decimal.localcontext() as ctx:
-            ctx.prec = 60
+            ctx.prec = 400  # any finite double at scale <= 9, unrounded
             return decimal.Decimal(repr(d)).quantize(
                 decimal.Decimal(1).scaleb(-scale),
                 rounding=decimal.ROUND_HALF_UP,
@@ -607,6 +616,19 @@ def _build_decimal_cosine_batches():
         # round(p, 7) -> double -> cast decimal(28,9)
         r_prime = float(java_round_half_up(p, 7))
         return int(java_round_half_up(r_prime, 9).scaleb(9))
+
+    def exact_row_dot(prods):
+        # the whole fold in Python ints: decimal(28,9) holds |x| < 1e19
+        # (1e28 units); the component cast and the fold's cast back
+        # after every add null the dot on overflow
+        limit = 10**28
+        total = 0
+        for p in prods:
+            u = exact_units9(p)
+            total += u
+            if abs(u) >= limit or abs(total) >= limit:
+                return None
+        return total / 10**9  # int true division rounds correctly
 
     def run(batches):
         import numpy as np
@@ -632,35 +654,47 @@ def _build_decimal_cosine_batches():
             finite = np.isfinite(P).all(axis=1)
             if not finite.all():
                 P = np.where(np.isfinite(P), P, 0.0)  # rows masked out below
-            U = np.abs(P) * 1e7
-            M = np.floor(U + 0.5)
-            np.copysign(M, P, out=M)
-            units = (M * 100.0).astype(np.int64)  # 1e-7 -> 1e-9 scale units
-            frac = U - np.floor(U)
-            suspect = (np.abs(frac - 0.5) < 1e-6) | (np.abs(P) >= 1e4)
+            A = np.abs(P)
+            with np.errstate(over="ignore", invalid="ignore"):  # |p| ~ 1e302+
+                U = A * 1e7
+                M = np.floor(U + 0.5)
+                np.copysign(M, P, out=M)
+                frac = U - np.floor(U)
+                band = 2.0 * (np.spacing(A) * 1e7 + np.spacing(U))
+                wide = finite & (A.sum(axis=1) >= 2.0**51 / 1e9)
+            slow = (np.abs(frac - 0.5) < band) | (A >= 1e4) | wide[:, None]
+            # 1e-7 -> 1e-9 scale units; slow entries are filled in below
+            units = (np.where(slow, 0.0, M) * 100.0).astype(np.int64)
+            suspect = slow & ~wide[:, None]
             if suspect.any():
                 rows, cols = np.nonzero(suspect)
                 for r, c in zip(rows.tolist(), cols.tolist()):
-                    p = float(P[r, c])
-                    if np.isfinite(p):
-                        units[r, c] = exact_units9(p)
+                    units[r, c] = exact_units9(float(P[r, c]))
             S = units.sum(axis=1)
-            dot = S.astype(np.float64) / 1e9  # exact: |S| << 2^53, 1e9 exact
+            dot = S.astype(np.float64) / 1e9  # exact: |S| < 2^52, 1e9 exact
+            overflow = np.zeros(n, dtype=bool)
+            for i in np.nonzero(wide)[0].tolist():
+                d = exact_row_dot(P[i].tolist())
+                if d is None:
+                    overflow[i] = True
+                else:
+                    dot[i] = d
             denom = np.sqrt(pdf["na"].to_numpy()) * np.sqrt(pdf["nb"].to_numpy())
             # Spark's Divide nulls out on a zero divisor (legacy mode;
-            # ANSI raises, but zero-norm vectors never reach real query
-            # paths)
-            nullrow = (~finite) | (denom == 0.0)
-            with np.errstate(divide="ignore", invalid="ignore"):
+            # ANSI raises)
+            nullrow = (~finite) | overflow | (denom == 0.0)
+            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
                 q = dot / np.where(denom == 0.0, np.nan, denom)
-                u6 = np.abs(q) * 1e6
+                aq = np.abs(q)
+                u6 = aq * 1e6
                 m6 = np.floor(u6 + 0.5)
                 np.copysign(m6, q, out=m6)
                 qfinite = np.isfinite(q)
                 cos = np.where(qfinite, m6, 0.0) / 1e6 + 0.0  # -0.0 -> 0.0
                 cos = np.where(qfinite, cos, q)  # NaN/Inf pass through round
                 f6 = u6 - np.floor(u6)
-            s6 = qfinite & ((np.abs(f6 - 0.5) < 1e-6) | (np.abs(q) >= 1e9))
+                band6 = 2.0 * (np.spacing(aq) * 1e6 + np.spacing(u6))
+                s6 = qfinite & ((np.abs(f6 - 0.5) < band6) | (aq >= 1e9))
             for i in np.nonzero(s6)[0].tolist():
                 cos[i] = float(java_round_half_up(float(q[i]), 6)) + 0.0
             out = pdf[["vec_a", "vec_b"]].copy()
@@ -947,11 +981,16 @@ def _grouped_pairs_cosine(
     interpreted fold — the pair scorer was the registry's largest real
     CPU at ~1.4 us per pair-component); ``vectorized=False`` keeps the
     expression form, which is what the SQL oracles replay and what the
-    equality test pins the Arrow path against."""
+    equality test pins the Arrow path against.
+
+    Zero-norm vectors are dropped before grouping: their cosine is
+    undefined (the Arrow path would NULL it, the expression form raises
+    under ANSI), so both forms emit no row for them."""
     from .dedup import _expand_pairs_adaptive
 
     aggd = (
-        enriched.groupBy(key)
+        enriched.where(F.col("norm_sq") != 0)
+        .groupBy(key)
         .agg(
             F.sort_array(
                 F.collect_list(F.struct("vec_id", "embedding", "norm_sq"))

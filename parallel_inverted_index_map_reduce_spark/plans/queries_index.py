@@ -355,7 +355,7 @@ FROM idx WHERE levenshtein(word, 'sow') <= 1
     "AND (array_intersect), OR (array_union), NOT (array_except), and "
     "exact-phrase match via the positional index "
     "(operators/index.py phrase_search — one scan + one aggregation, "
-    "adjacency checked by a per-row array predicate; the oracle uses "
+    "adjacency checked by a per-row array fold; the oracle uses "
     "the n-way positional self-join formulation, proving equivalence). "
     "The '*_stored' rows answer the SAME queries from the persisted "
     "serving layout (operators/serving.py boolean_search_stored over "
@@ -364,11 +364,11 @@ FROM idx WHERE levenshtein(word, 'sow') <= 1
     "corpus-scan formulation — the hash match PROVES each stored path "
     "returns exactly what a full corpus scan returns, at pruned-lookup "
     "cost. 'slop'/'slop_stored' rows are SLOPPY-phrase match "
-    "(phrase_search_slop: the words in order with up to slop=1 "
-    "intervening tokens per gap, verified by a backward-reachability "
+    "(phrase_search with slop=1: the words in order with up to one "
+    "intervening token per gap, verified by a backward-reachability "
     "array fold — the oracle's positional range-join formulation "
-    "proves the fold; slop=0 is proven identical to phrase_search in "
-    "tests). 'prefix'/'prefix_stored' rows are the wildcard-tail lookup "
+    "proves the fold; slop=0 is pinned against an adjacency reference "
+    "in tests). 'prefix'/'prefix_stored' rows are the wildcard-tail lookup "
     "(index.py prefix_search: the startswith predicate filters the "
     "token stream BEFORE aggregation; the stored twin additionally "
     "prunes to the first letter's partition directory), one row per "
@@ -423,9 +423,9 @@ def q_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    sl = slop_rows(ix.phrase_search_slop(docs, slop_phrase, slop=1), "slop")
+    sl = slop_rows(ix.phrase_search(docs, slop_phrase, slop=1), "slop")
     sl_stored = slop_rows(
-        srv.phrase_slop_search_stored(spark, base, slop_phrase, slop=1),
+        srv.phrase_search_stored(spark, base, slop_phrase, slop=1),
         "slop_stored",
     )
     bs_stored = srv.boolean_search_stored(spark, base, "spark", "query").select(

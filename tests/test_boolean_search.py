@@ -1,6 +1,6 @@
 """Boolean posting-list search: the fused single-aggregation operator
-must agree row-for-row with the composition of the per-op parity
-helpers (boolean_and/or/not over a built index), including the
+must agree row-for-row with the composition of the per-op reference
+helpers below (boolean_and/or/not over a built index), including the
 zero-rows-when-a-term-is-missing semantics both inherit from the
 cross-join-of-empty formulation."""
 
@@ -19,11 +19,37 @@ DOCS = [
 ]
 
 
+def _per_op(index, t1, t2, combine):
+    """Reference form of one boolean op: self-join of the two terms'
+    single-row index lookups, postings combined by ``combine``
+    (array_intersect / array_union / array_except)."""
+    a = index.where(F.col("word") == t1).select(F.col("postings").alias("p1"))
+    b = index.where(F.col("word") == t2).select(F.col("postings").alias("p2"))
+    return a.crossJoin(F.broadcast(b)).select(
+        F.lit(t1).alias("term1"),
+        F.lit(t2).alias("term2"),
+        F.sort_array(combine("p1", "p2")).alias("doc_ids"),
+    )
+
+
+def boolean_and(index, t1, t2):
+    return _per_op(index, t1, t2, F.array_intersect)
+
+
+def boolean_or(index, t1, t2):
+    return _per_op(index, t1, t2, F.array_union)
+
+
+def boolean_not(index, t1, t2):
+    """Docs containing t1 but not t2."""
+    return _per_op(index, t1, t2, F.array_except)
+
+
 def _composed(idx, t1, t2):
     parts = [
-        ix.boolean_and(idx, t1, t2).withColumn("op", F.lit("and")),
-        ix.boolean_or(idx, t1, t2).withColumn("op", F.lit("or")),
-        ix.boolean_not(idx, t1, t2).withColumn("op", F.lit("not")),
+        boolean_and(idx, t1, t2).withColumn("op", F.lit("and")),
+        boolean_or(idx, t1, t2).withColumn("op", F.lit("or")),
+        boolean_not(idx, t1, t2).withColumn("op", F.lit("not")),
     ]
     out = parts[0]
     for p in parts[1:]:

@@ -8,9 +8,9 @@ emitted per-letter files against the shipped goldens
 
 This is the strongest correctness signal available: 33,262 golden lines
 produced by the reference binary itself. EVERY index-build variant the
-engine ships (plain window build, decomposed-rank scalable build,
-incremental merge of a 300+55 corpus split, chunked posting lists
-reassembled) must reproduce them byte-for-byte.
+engine ships (plain window build, incremental merge of a 300+55 corpus
+split, chunked posting lists reassembled) must reproduce them
+byte-for-byte.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ from parallel_inverted_index_map_reduce_spark.operators.index import (
     assemble_chunked_index,
     build_index,
     build_index_chunked,
-    build_index_scalable,
     merge_index,
 )
 from parallel_inverted_index_map_reduce_spark.sinks.text_index import (
@@ -40,10 +39,6 @@ CHECKER = "/root/reference/checker"
 
 def _build_plain(docs):
     return build_index(docs)
-
-
-def _build_scalable(docs):
-    return build_index_scalable(docs)
 
 
 def _build_merged(docs):
@@ -64,7 +59,6 @@ def _build_chunked(docs):
 
 BUILDERS = {
     "plain": _build_plain,
-    "scalable": _build_scalable,
     "merged": _build_merged,
     "chunked": _build_chunked,
 }

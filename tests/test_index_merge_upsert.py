@@ -11,7 +11,6 @@ from parallel_inverted_index_map_reduce_spark.operators.index import (
     assemble_chunked_index,
     build_index,
     build_index_chunked,
-    build_index_scalable,
     merge_index,
     merge_index_chunked,
 )
@@ -59,19 +58,6 @@ def test_merge_index_one_based_matches_rebuild(spark):
         for r in full.collect()
     )
     assert mrows == frows
-
-
-def test_scalable_rank_decomposition_equals_window(spark):
-    docs = load_table(spark, SF_ORACLE, "documents")
-    a = sorted(
-        (r.letter, r.word, r.df, tuple(r.postings), r.rank)
-        for r in build_index(docs).collect()
-    )
-    b = sorted(
-        (r.letter, r.word, r.df, tuple(r.postings), r.rank)
-        for r in build_index_scalable(docs).collect()
-    )
-    assert a == b
 
 
 @pytest.mark.parametrize("chunk_size", [1, 16, 1_000_000])

@@ -389,13 +389,12 @@ def test_vectorized_pair_cosine_equals_expression(spark):
 def test_vectorized_pair_cosine_edge_cases(spark):
     """Degenerate inputs must match the expression form exactly:
     ragged lengths (index-intersection semantics), empty arrays and
-    zero vectors (NaN cosine via 0/0 passes round unchanged), tiny
+    zero vectors (dropped before pairing, so they emit no row), tiny
     negative cosines (round6 -> Java's positive 0.0, never -0.0), and
     half-boundary-shaped components (the exact-fallback band). ANSI is
-    disabled for the comparison: under ANSI (the session default) the
-    EXPRESSION path raises DIVIDE_BY_ZERO on a zero-norm pair, so the
-    0/0 semantics are only comparable with ANSI off — real corpora
-    never contain zero-norm vectors either way."""
+    disabled for the comparison, which keeps the legacy semantics the
+    Arrow path mirrors; the ANSI default is covered by
+    test_grouped_pairs_skip_zero_norm_vectors."""
     import math
 
     rows = [
@@ -404,9 +403,10 @@ def test_vectorized_pair_cosine_edge_cases(spark):
         (2, [0.0, 0.0, 0.0]),            # zero norm -> NaN cosine
         (3, []),                          # empty -> zero norm -> NaN
         (4, [0.5, 0.5]),                  # ragged vs dim-3 rows
-        (5, [5e-8, 2.5e-7, -5e-8]),      # half-boundary products vs row 0
+        (5, [5e-8, 2.5e-7, -5e-8]),      # norm_sq rounds to 0 -> dropped
         (6, [0.25, -0.75, 1.5]),         # exact dyadics
         (7, [1234.5678, -0.0001234, 3.3]),
+        (8, [5e-8, 2.5e-7, 0.5]),        # half-boundary products vs row 0
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     enr = emb.select(
@@ -437,10 +437,235 @@ def test_vectorized_pair_cosine_edge_cases(spark):
             spark.conf.unset("spark.sql.ansi.enabled")
         else:
             spark.conf.set("spark.sql.ansi.enabled", prev)
-    assert len(expr) == len(rows) * (len(rows) - 1) // 2
+    scored = len(rows) - 3  # rows 2, 3 and 5 have zero norm and drop
+    assert len(expr) == scored * (scored - 1) // 2
     assert fast == expr
     # the tiny-negative pair must have collapsed to positive 0.0
     assert expr[(0, 1)] == "0.0"
+
+
+def test_grouped_pairs_skip_zero_norm_vectors(spark):
+    """A zero vector sharing a bucket with real vectors has no defined
+    cosine: under the session's ANSI default neither scorer may raise,
+    and both emit no row for it."""
+    rows = [
+        (0, [1.0, 2.0, 0.0]),
+        (1, [0.0, 0.0, 0.0]),  # zero norm
+        (2, [2.0, 1.0, 0.5]),
+        (3, [1e-5, 0.0, 0.0]),  # nonzero, but norm_sq rounds to 0
+        (4, [-1.0, 0.5, 3.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    enr = emb.select(
+        "vec_id",
+        "embedding",
+        F.lit(0).alias("g"),
+        sim.norm_sq_expr(F.col("embedding")).alias("norm_sq"),
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    got = {
+        vectorized: sorted(
+            map(
+                tuple,
+                sim._grouped_pairs_cosine(enr, "g", vectorized=vectorized).collect(),
+            )
+        )
+        for vectorized in (True, False)
+    }
+    assert got[True] == got[False]
+    assert {(a, b) for a, b, _ in got[True]} == {(0, 2), (0, 4), (2, 4)}
+    assert all(c is not None for _, _, c in got[True])
+
+
+def _half_up(d: float, scale: int):
+    """Java's BigDecimal.valueOf(d).setScale(scale, HALF_UP): HALF_UP
+    over the shortest decimal repr of the double."""
+    import decimal
+
+    with decimal.localcontext() as ctx:
+        ctx.prec = 400
+        return decimal.Decimal(repr(d)).quantize(
+            decimal.Decimal(1).scaleb(-scale), rounding=decimal.ROUND_HALF_UP
+        )
+
+
+def _scalar_cosine(ea, eb, na: float, nb: float):
+    """Scalar twin of round(decimal_dot_expr(ea, eb).cast(double) /
+    (sqrt(na) * sqrt(nb)), 6), one component at a time: round(x*y, 7),
+    back to double, cast to decimal(28,9), decimal fold left to right
+    (NULL once a value leaves decimal(28,9)), cast to double, divide,
+    round 6. NULL on a non-finite product or a zero denominator."""
+    import decimal
+    import math
+
+    limit = decimal.Decimal(10) ** 19
+    with decimal.localcontext() as ctx:
+        ctx.prec = 400
+        total = decimal.Decimal(0)
+        for c in range(max(len(ea), len(eb))):
+            x = float(ea[c]) if c < len(ea) else 0.0
+            y = float(eb[c]) if c < len(eb) else 0.0
+            p = x * y
+            if not math.isfinite(p):
+                return None
+            v = _half_up(float(_half_up(p, 7)), 9)
+            total += v
+            if abs(v) >= limit or abs(total) >= limit:
+                return None
+    denom = math.sqrt(na) * math.sqrt(nb)
+    if denom == 0.0:
+        return None
+    q = float(total) / denom
+    if not math.isfinite(q):
+        return q
+    return float(_half_up(q, 6)) + 0.0
+
+
+def _near_half_boundary(mantissa, exponent, scale, nudge, sign):
+    """A double within ``nudge`` ulps of the scale-``scale`` decimal
+    half-boundary nearest mantissa * 10^exponent."""
+    import decimal
+
+    import numpy as np
+
+    step = decimal.Decimal(1).scaleb(-scale)
+    base = decimal.Decimal(repr(mantissa * 10.0**exponent)).quantize(
+        step, rounding=decimal.ROUND_FLOOR
+    )
+    v = float(base + step / 2)
+    for _ in range(abs(nudge)):
+        v = float(np.nextafter(v, np.inf if nudge > 0 else -np.inf))
+    return sign * v
+
+
+def _components():
+    from hypothesis import strategies as st
+
+    boundary = st.builds(
+        lambda *a: (_near_half_boundary(*a), 1.0),
+        st.floats(1.0, 9.999),
+        st.integers(-3, 9),
+        st.sampled_from([6, 7]),
+        st.integers(-3, 3),
+        st.sampled_from([1.0, -1.0]),
+    )
+    generic = st.builds(
+        lambda m, e, sign, y: (sign * m * 10.0**e, y),
+        st.floats(1.0, 9.999),
+        st.integers(-3, 9),
+        st.sampled_from([1.0, -1.0]),
+        st.floats(0.5, 2.0),
+    )
+    return st.one_of(boundary, generic)
+
+
+def test_decimal_cosine_worker_matches_scalar_twin():
+    """The Arrow worker behind decimal_cosine_pairs_vectorized must
+    return the scalar twin's bits for products of magnitude 1e-3..1e10,
+    including doubles a few ulps from a round-7 or round-6 half-boundary
+    (unit denominators make the quotient the dot itself, so both
+    rounding stages see the boundary) and rows whose unit sum leaves
+    the int64-safe range or decimal(28,9)."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    row = st.tuples(
+        st.lists(_components(), min_size=1, max_size=4),
+        st.sampled_from([(1.0, 1.0), (2.0, 8.0), (0.3, 7.1)]),
+    )
+    worker = sim._build_decimal_cosine_batches()
+
+    def canon(c):
+        if c is None or (isinstance(c, float) and math.isnan(c)):
+            return "null"
+        return repr(float(c))
+
+    @settings(
+        max_examples=300,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(st.lists(row, min_size=1, max_size=8))
+    def check(rows):
+        pdf = pd.DataFrame(
+            {
+                "vec_a": list(range(len(rows))),
+                "vec_b": list(range(1, len(rows) + 1)),
+                "ea": [np.array([x for x, _ in comps]) for comps, _ in rows],
+                "eb": [np.array([y for _, y in comps]) for comps, _ in rows],
+                "na": [n[0] for _, n in rows],
+                "nb": [n[1] for _, n in rows],
+            }
+        )
+        got = [canon(c) for c in next(worker(iter([pdf])))["cosine"]]
+        want = [
+            canon(_scalar_cosine(pdf["ea"][i], pdf["eb"][i], *rows[i][1]))
+            for i in range(len(rows))
+        ]
+        assert got == want
+
+    check()
+    # pinned explicitly: the reported |p| >= 1e3 divergence (round 7
+    # must give 6682.1274426, so the dot is 6682.1274425 and rounds up),
+    # an int64 unit-sum overflow row and a decimal(28,9) overflow row
+    pdf = pd.DataFrame(
+        {
+            "vec_a": [0, 1, 2],
+            "vec_b": [1, 2, 3],
+            "ea": [
+                np.array([6682.12744255, -1e-7]),
+                np.array([6e9] * 3),
+                np.array([1e19]),
+            ],
+            "eb": [np.array([1.0, 1.0]), np.array([1.0] * 3), np.array([1.0])],
+            "na": [1.0, 1.0, 1.0],
+            "nb": [1.0, 1.0, 1.0],
+        }
+    )
+    got = [canon(c) for c in next(worker(iter([pdf])))["cosine"]]
+    assert got == ["6682.127443", "18000000000.0", "null"]
+
+
+def test_vectorized_pair_cosine_large_magnitudes_match_expression(spark):
+    """The scalar twin's model of the JVM chain, checked on the JVM:
+    half-boundary products at magnitudes 1e-3..1e9 score the same bits
+    through the Arrow worker and the expression form."""
+    import random
+
+    rng = random.Random(20261017)
+    rows = []
+    for i in range(240):
+        e = rng.randint(-3, 9)
+        x = _near_half_boundary(
+            rng.uniform(1.0, 9.999),
+            e,
+            rng.choice([6, 7]),
+            rng.randint(-3, 3),
+            rng.choice([1.0, -1.0]),
+        )
+        y = [1.0, rng.uniform(-1, 1)]
+        rows.append((i, i + 1, [x, rng.uniform(-1, 1)], y, 1.0, 1.0))
+    pairs = spark.createDataFrame(
+        rows,
+        "vec_a long, vec_b long, ea array<double>, eb array<double>, "
+        "na double, nb double",
+    )
+    expr = pairs.select(
+        "vec_a",
+        "vec_b",
+        F.round(
+            sim.decimal_dot_expr(F.col("ea"), F.col("eb")).cast("double")
+            / (F.sqrt("na") * F.sqrt("nb")),
+            6,
+        ).alias("cosine"),
+    )
+    want = sorted(map(tuple, expr.collect()))
+    got = sorted(map(tuple, sim.decimal_cosine_pairs_vectorized(pairs).collect()))
+    assert got == want
 
 
 def test_vectorized_assignment_equals_expression_fold(spark):

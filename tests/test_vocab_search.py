@@ -333,30 +333,45 @@ def test_pmi_rejects_bad_window(spark):
 # --------------------------------------------------------------------------
 
 
+def _adjacent_starts(tokens, words):
+    """Exact-phrase reference: every start i with tokens[i + k] ==
+    words[k] for all k."""
+    n = len(words)
+    return [
+        i
+        for i in range(len(tokens) - n + 1)
+        if tokens[i : i + n] == words
+    ]
+
+
 def test_slop_zero_equals_exact_phrase(spark):
-    """phrase_search_slop(slop=0) must be row-identical to phrase_search
-    — the reachability fold at gap [1,1] IS exact adjacency."""
+    """phrase_search(slop=0) must equal plain token adjacency — the
+    reachability fold at gap [1,1] IS exact adjacency — checked against
+    a driver-side reference over the oracle corpus."""
     from parallel_inverted_index_map_reduce_spark.operators.index import (
+        normalize_query_tokens,
         phrase_search,
-        phrase_search_slop,
     )
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    for phrase in ("spark query", "stream table hash"):
-        a = sorted(
+    texts = [(r["doc_id"], r["text"] or "") for r in docs.collect()]
+    for phrase in ("spark query", "stream table hash", "batch batch", "the"):
+        words = normalize_query_tokens(phrase)
+        want = sorted(
+            (doc_id, tuple(starts))
+            for doc_id, text in texts
+            if (starts := _adjacent_starts(normalize_query_tokens(text), words))
+        )
+        got = sorted(
             (r["doc_id"], tuple(r["match_positions"]))
-            for r in phrase_search(docs, phrase).collect()
+            for r in phrase_search(docs, phrase, slop=0).collect()
         )
-        b = sorted(
-            (r["doc_id"], tuple(sorted(r["match_positions"])))
-            for r in phrase_search_slop(docs, phrase, slop=0).collect()
-        )
-        assert a == b and a, phrase
+        assert got == want and got, phrase
 
 
 def test_slop_semantics_and_monotonicity(spark):
     from parallel_inverted_index_map_reduce_spark.operators.index import (
-        phrase_search_slop,
+        phrase_search,
     )
 
     docs = spark.createDataFrame(
@@ -373,7 +388,7 @@ def test_slop_semantics_and_monotonicity(spark):
 
     def ids(slop):
         return sorted(
-            r["doc_id"] for r in phrase_search_slop(docs, phrase, slop=slop).collect()
+            r["doc_id"] for r in phrase_search(docs, phrase, slop=slop).collect()
         )
 
     assert ids(0) == [0]
@@ -382,27 +397,27 @@ def test_slop_semantics_and_monotonicity(spark):
     # start positions are the chain heads
     got = {
         r["doc_id"]: sorted(r["match_positions"])
-        for r in phrase_search_slop(docs, phrase, slop=2).collect()
+        for r in phrase_search(docs, phrase, slop=2).collect()
     }
     assert got[0] == [0] and got[1] == [0] and got[2] == [0]
     with pytest.raises(ValueError):
-        phrase_search_slop(docs, phrase, slop=-1)
+        phrase_search(docs, phrase, slop=-1)
 
 
 def test_slop_stored_matches_scan(spark, vocab_store):
     from parallel_inverted_index_map_reduce_spark.operators.index import (
-        phrase_search_slop,
+        phrase_search,
     )
 
     base, docs = vocab_store
     for phrase, slop in (("stream hash", 1), ("spark query", 0), ("spark query", 2)):
         a = sorted(
             (r["doc_id"], tuple(sorted(r["match_positions"])))
-            for r in phrase_search_slop(docs, phrase, slop=slop).collect()
+            for r in phrase_search(docs, phrase, slop=slop).collect()
         )
         b = sorted(
             (r["doc_id"], tuple(sorted(r["match_positions"])))
-            for r in srv.phrase_slop_search_stored(
+            for r in srv.phrase_search_stored(
                 spark, base, phrase, slop=slop
             ).collect()
         )
